@@ -2,18 +2,20 @@ package graft.exports
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
+import graft.queries.checkpointCompact
 import graft.session.Sessionize
 import graft.sources.Tables
 
 /**
  * The reference's three denormalized exports (SURVEY.md §1.5, K1 sink —
  * `main.py:229-234`) as real sharded CSV writes: one part-file per task,
- * exactly Beam's `WriteToText` shard model. Writing is embarrassingly
- * parallel — no coalesce, no global sort; at 100 TB the sink scales with
- * the task count.
+ * exactly Beam's `WriteToText` shard model, with no global sort. The
+ * shard count follows the data size, not `spark.sql.shuffle.partitions`
+ * ([[writeAll]] writes from one checkpoint with AQE-sized shards).
  *
  * Input is the parsed-hit frame ([[graft.ingest.HitParser.parse]] output:
  * ts in unix seconds + the 13 reference fields). Each export has exactly
@@ -59,17 +61,20 @@ object Exports {
   }
 
   /** Write all three exports under `baseDir/{hits,visits,visitors}` as
-    * sharded CSV (part-file per task ≡ Beam shard-per-bundle). The
-    * sessionized frame is computed ONCE and cached across the three writes
-    * — without it each sink re-reads and re-sessionizes the input (three
-    * scans, two identical shuffles). */
+    * sharded CSV (part-file per task ≡ Beam shard-per-bundle), from ONE
+    * eager DISK_ONLY checkpoint of the sessionized input, released after.
+    * Its job runs under AQE, which coalesces the shards to a data-sized
+    * few; a `persist()`ed plan cannot, it keeps its exchange's partition
+    * count (`canChangeCachedPlanOutputPartitioning` is off by default). */
   def writeAll(parsedHits: DataFrame, baseDir: String): Unit = {
-    val sess = sessionized(parsedHits).persist()
+    val sess = checkpointCompact(sessionized(parsedHits))
     try {
       hitsFrom(sess).write.mode("overwrite").csv(s"$baseDir/hits")
       visitsFrom(sess).write.mode("overwrite").csv(s"$baseDir/visits")
       visitorsFrom(sess).write.mode("overwrite").csv(s"$baseDir/visitors")
-    } finally sess.unpersist()
+    } finally sess.queryExecution.logical match {
+      case pinned: LogicalRDD => pinned.rdd.unpersist()
+    }
   }
 
   /**

@@ -38,6 +38,14 @@ class PipelineSpec extends SparkSpec {
     assert(nVisits > 0 && nVisits <= nParsed)
   }
 
+  test("run on the documented data/sample.tsv: one malformed row dropped") {
+    val outDir = s"${Files.createTempDirectory("graft-pipeline-sample")}/exports"
+    val (gotIn, gotParsed) = Pipeline.run(spark, "data/sample.tsv", outDir)
+    assert((gotIn, gotParsed) === (8L, 7L))
+    // two users, each split once: a 4078 s gap, and a gap of exactly 1800 s
+    assert(spark.read.csv(s"$outDir/visits").count() === 4)
+  }
+
   test("parseArgs: required flags, defaults, and the --spark-names switch") {
     val a = Pipeline.parseArgs(Seq("--input", "in/*.gz", "--output", "out",
                                    "--encoding", "ISO-8859-1",

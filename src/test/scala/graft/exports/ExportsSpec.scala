@@ -2,6 +2,7 @@ package graft.exports
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -29,6 +30,57 @@ class ExportsSpec extends SparkSpec {
     assert(hits.columns.length === 12)
     assert(visits.columns.length === 4)
     assert(visitors.columns.length === 3)
+  }
+
+  test("writeAll exports equal the frames field for field (duplicates counted)") {
+    val dir = Files.createTempDirectory("graft-exports-eq").toString
+    Exports.writeAll(parsed, dir)
+    def asStrings(df: DataFrame): DataFrame =
+      df.select(df.columns.map(c => col(c).cast("string")): _*)
+    Seq("hits" -> Exports.hitsFrame(parsed),
+        "visits" -> Exports.visitsFrame(parsed),
+        "visitors" -> Exports.visitorsFrame(parsed)).foreach { case (e, frame) =>
+      // nullValue = a token no field holds: a quoted "" then reads back as
+      // "" and only an unquoted empty field as null (the default maps both
+      // to null)
+      val written = spark.read.option("nullValue", "\\N").csv(s"$dir/$e")
+      val expected = asStrings(frame)
+      assert(written.exceptAll(expected).count() === 0, s"$e: rows not in frame")
+      assert(expected.exceptAll(written).count() === 0, s"$e: rows not written")
+    }
+  }
+
+  test("writeAll releases its checkpoint when the writes finish or throw") {
+    parsed.count() // materialize the suite's own cache before the snapshot
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Exports.writeAll(parsed, Files.createTempDirectory("graft-exports-pin").toString)
+    assert(sc.getPersistentRDDs.keySet === before)
+    // a base dir that is a plain file: the checkpoint runs, the first write throws
+    val notADir = Files.createTempFile("graft-exports-pin", ".txt").toString
+    intercept[Exception](Exports.writeAll(parsed, notADir))
+    assert(sc.getPersistentRDDs.keySet === before)
+  }
+
+  test("writeAll at 200 shuffle partitions writes data-sized shards, not 200 per export") {
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    try {
+      // 150 users: a 200-partition sessionize exchange leaves ~100 non-empty shards
+      val hits = HitParser.parse(FeedSynth.synthLines(
+        Tables.events(spark, "/root/testdata/sf0.01")))
+      val dir = Files.createTempDirectory("graft-exports-shards").toString
+      Exports.writeAll(hits, dir)
+      val maxShards = 2 * spark.sparkContext.defaultParallelism
+      val n = hits.count()
+      Seq("hits" -> n, "visits" -> Exports.visitsFrame(hits).count(),
+          "visitors" -> n).foreach { case (e, rows) =>
+        val parts = new java.io.File(s"$dir/$e").list().filter(_.startsWith("part-"))
+        assert(parts.length <= maxShards, s"$e: ${parts.length} part files")
+        assert(spark.read.csv(s"$dir/$e").count() === rows, s"$e row count")
+      }
+    } finally spark.conf.set(key, old)
   }
 
   test("visits frame: key joins back to hits frame (the relational re-join the exports serve)") {
